@@ -5,12 +5,13 @@ public/compact_lang_det.h:177-306) as Arrow-batched pandas UDFs:
 
   detect_udf          ~ DetectLanguage           (top language code only)
   detect_summary_udf  ~ ExtDetectLanguageSummary (top-3 + percents + scores)
-  analyze_udf         = summary + fastText cross-check + perplexity (the
-                        pipeline's combined stage)
+  analyze_udf         = summary + fastText cross-check + perplexity
+  make_turn_udf()     = the pipeline's one Python stage: the slim langid
+                        struct plus the per-turn rules, toxicity and PII
+                        scrub (kernels/rules.py), all on one Arrow batch
 
-All are `Iterator[pd.Series] -> Iterator[...]` UDFs so the broadcast model
-loads once per Python worker, not once per batch
-(executor-side lazy singleton = CLD2 dynamic-mode load,
+All are iterator UDFs so the broadcast model loads once per Python worker,
+not once per batch (executor-side lazy singleton = CLD2 dynamic-mode load,
 internal/compact_lang_det_impl.cc:108-136).
 """
 
@@ -19,7 +20,9 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType, BooleanType, DoubleType, IntegerType, LongType, StringType,
     StructField, StructType,
@@ -187,29 +190,31 @@ SPANS_SCHEMA = ArrayType(StructType([
 ]))
 
 
-@F.pandas_udf(SPANS_SCHEMA)
-def detect_spans_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+_SPAN_FIELDS = list(to_arrow_schema(StructType([
+    StructField("spans", SPANS_SCHEMA)])).field("spans").type.value_type)
+
+
+@F.arrow_udf(SPANS_SCHEMA)
+def detect_spans_udf(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
     """Per-row language spans (the ExtDetectLanguageSummaryCheckUTF8
-    resultchunkvector output: W4 stitching + W3 boundary sharpening)."""
+    resultchunkvector output: W4 stitching + W3 boundary sharpening).
+    The list column is built from the row-sorted span arrays and their
+    per-row offsets; a NULL text has no spans."""
     import numpy as np
+    import pyarrow.compute as pc
     from cld2_spark.kernels.detect import detect_batch
     from cld2_spark.kernels.model import default_model
     model = default_model()
-    for s in batches:
-        res = detect_batch(s.fillna("").tolist(), model, return_spans=True)
-        rid = res["span_rid"]
-        order = np.argsort(rid, kind="stable")
-        bounds = np.searchsorted(rid[order], np.arange(len(s) + 1))
-        rows = []
-        off, ln, lg = (res["span_off"][order], res["span_len"][order],
-                       res["span_lang"][order])
-        offb, lnb = res["span_off_b"][order], res["span_len_b"][order]
-        for i in range(len(s)):
-            lo, hi = bounds[i], bounds[i + 1]
-            rows.append([{"off": int(off[j]), "len": int(ln[j]),
-                          "off_b": int(offb[j]), "len_b": int(lnb[j]),
-                          "lang": str(lg[j])} for j in range(lo, hi)])
-        yield pd.Series(rows)
+    for texts in batches:
+        res = detect_batch(pc.fill_null(texts, "").to_pylist(), model,
+                           return_spans=True)
+        order = np.argsort(res["span_rid"], kind="stable")
+        offsets = np.searchsorted(res["span_rid"][order],
+                                  np.arange(len(texts) + 1)).astype(np.int32)
+        spans = pa.StructArray.from_arrays(
+            [pa.array(res[f"span_{f.name}"][order], type=f.type)
+             for f in _SPAN_FIELDS], fields=_SPAN_FIELDS)
+        yield pa.ListArray.from_arrays(pa.array(offsets), spans)
 
 
 @F.pandas_udf(PIPELINE_SCHEMA)
@@ -221,3 +226,38 @@ def pipeline_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
     for s in batches:
         res = analyze_batch(s.fillna("").tolist(), model)
         yield _pipeline_pdf(res)
+
+
+# the pipeline's one Python stage: the slim langid struct plus the
+# per-turn rules, toxicity and scrub (kernels/rules.py)
+TURN_SCHEMA = StructType(PIPELINE_SCHEMA.fields + [
+    StructField("too_short", BooleanType()),
+    StructField("low_quality", BooleanType()),
+    StructField("toxic", BooleanType()),
+    StructField("scrubbed_text", StringType()),
+])
+_TURN_FIELDS = list(to_arrow_schema(TURN_SCHEMA))
+
+
+def _turn_batches(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+    import pyarrow.compute as pc
+    from cld2_spark.kernels.analyze import analyze_batch
+    from cld2_spark.kernels.model import default_model
+    from cld2_spark.kernels.rules import rules_batch
+    model = default_model()
+    for texts in batches:
+        texts = pc.fill_null(texts, "")  # NULL is empty text, as in the oracle
+        res = analyze_batch(texts.to_pylist(), model)
+        res["lang1"] = res["summary_lang"]
+        res.update(rules_batch(texts))
+        yield pa.StructArray.from_arrays(
+            [res[f.name].cast(f.type) if isinstance(res[f.name], pa.Array)
+             else pa.array(res[f.name], type=f.type) for f in _TURN_FIELDS],
+            fields=_TURN_FIELDS)
+
+
+def make_turn_udf():
+    """A fresh Arrow UDF (TURN_SCHEMA) for one query. Not a module-level
+    singleton: a UDF object caches its JVM function, which would outlive a
+    stopped SparkContext and its accumulator server."""
+    return F.arrow_udf(TURN_SCHEMA)(_turn_batches)

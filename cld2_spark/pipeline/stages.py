@@ -8,9 +8,12 @@ verdicts + scrubbed text over the transcripts schema
 Physical shape (designed for 10^12 turns / 1000 executors):
   - every stage is row-local: NO shuffle anywhere in the chain; the only
     exchanges in a production run are the source scan and the sink write.
-  - the single Python stage is one Arrow-batched iterator UDF (`analyze_udf`)
-    computing langid + cross-check + perplexity in one normalization pass;
-    everything else is whole-stage-codegen SQL (rules, scrub, decision).
+  - the single Python stage is one Arrow-batched iterator UDF
+    (`make_turn_udf`): langid + cross-check + perplexity in one
+    normalization pass, then the heuristic rules, toxicity and the PII
+    scrub on the same Arrow batch (kernels/rules.py); only the decision is
+    whole-stage-codegen SQL. `with_quality`/`with_scrub` keep the Spark SQL
+    rendering of the rules for the standalone queries and layer timings.
   - `partition_for_scale` gives the explicit conv_id hash partitioning +
     salt for mega-conversations demanded by the north rule; per-turn stages
     don't need it (row-local), so it's applied only when downstream
@@ -21,7 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from cld2_spark.functions.langid import analyze_udf, pipeline_udf
+from cld2_spark.functions.langid import analyze_udf, make_turn_udf, pipeline_udf
 from cld2_spark.kernels import quality as Q
 from cld2_spark.kernels import scrub as S
 from cld2_spark.pipeline.decide import decision_columns
@@ -79,7 +82,10 @@ def run_pipeline(df: DataFrame, text_col: str = "text",
     """Full per-turn chain; returns the flat verdict table (FIXTURES.md §4).
     `passthrough` names extra input columns to carry into the output (e.g.
     the event-time column for a downstream stateful streaming operator)."""
-    out = with_decision(with_scrub(with_quality(with_langid(df, text_col), text_col), text_col))
+    out = df.withColumn(LD, make_turn_udf()(F.col(text_col)))
+    out = with_decision(out.withColumns({
+        c: F.col(f"{LD}.{c}")
+        for c in ("too_short", "low_quality", "toxic", "scrubbed_text")}))
     return out.select(
         "conv_id", "turn_idx",
         F.col(_answer_field(out)).alias("lang1"),

@@ -111,6 +111,23 @@ def test_short_turn_best_effort_rescue(spark):
     assert not bool(got["is_reliable"][0])
 
 
+def test_null_text_is_empty_text(spark):
+    """A NULL turn reads as empty text, as in the oracle: dropped as
+    too_short with scrubbed_text '' (not langid_unreliable with NULL)."""
+    rows = [("c1", 0, "user", None, "", None), ("c1", 1, "user", "", "", None)]
+    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    want = oracle_labels(pd.DataFrame(rows, columns=cols))
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts timestamp")
+    got = (run_pipeline(df).toPandas()
+           .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
+    assert want["drop_reason"].tolist() == ["too_short", "too_short"]
+    assert want["scrubbed_text"].tolist() == ["", ""]
+    pd.testing.assert_frame_equal(got[list(want.columns)], want,
+                                  check_dtype=False)
+
+
 def test_slim_and_full_langid_paths_decide_identically(spark):
     """with_langid(slim=False) attaches the full analyze struct (sorted
     lang1 + separate summary_lang); the decision must read the summary

@@ -45,61 +45,66 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
+def duckdb_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with the contract tables as views over sf_dir."""
+    con = duckdb.connect()
+    for t in E.TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    return con
+
+
+def check_query(spark, con, name: str, sf_dir: str,
+                oracles: dict[str, str]) -> tuple[bool, str]:
+    """Run one queries() entry on Spark and its `oracles` (oracle_sql())
+    entry on DuckDB. Returns (ok, message); a query without an oracle only
+    needs rows."""
+    try:
+        got = E.queries()[name](spark, sf_dir).toPandas()
+    except Exception as exc:
+        return False, f"spark error: {exc}"
+    oracle = oracles.get(name)
+    if oracle is None:
+        return len(got) > 0, f"[rows-only] {len(got)} rows"
+    try:
+        want = con.execute(oracle).df()
+    except Exception as exc:
+        return False, f"duckdb error: {exc}"
+    g, w = normalize(got), normalize(want)
+    if list(g.columns) != list(w.columns):
+        return False, f"schema mismatch {list(g.columns)} vs {list(w.columns)}"
+    if len(g) != len(w):
+        return False, f"row count {len(g)} vs {len(w)}"
+    if not g.equals(w):
+        bad = (g != w).any(axis=1)
+        return False, (f"{bad.sum()}/{len(g)} differing rows\n"
+                       f"  got : {g[bad].head(3).to_dict('records')}\n"
+                       f"  want: {w[bad].head(3).to_dict('records')}")
+    return True, f"{len(g)} rows match"
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
     from cld2_spark.session import get_spark
     spark = get_spark("contract-check", cores=8, shuffle_partitions=8)
-
-    con = duckdb.connect()
-    for t in E.TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    con = duckdb_views(sf_dir)
 
     only = set(sys.argv[2:])  # optional query-name filter for iteration
     oracles = E.oracle_sql()
     failures = []
-    for name, fn in E.queries().items():
+    for name in E.queries():
         if only and name not in only:
             continue
-        try:
-            got = fn(spark, sf_dir).toPandas()
-        except Exception as exc:
-            failures.append((name, f"spark error: {exc}"))
-            print(f"[FAIL] {name}: spark error: {exc}")
-            continue
-        if name not in oracles:
-            print(f"[rows-only] {name}: {len(got)} rows")
-            if len(got) == 0:
-                failures.append((name, "0 rows"))
-            continue
-        try:
-            want = con.execute(oracles[name]).df()
-        except Exception as exc:
-            failures.append((name, f"duckdb error: {exc}"))
-            print(f"[FAIL] {name}: duckdb error: {exc}")
-            continue
-        g, w = normalize(got), normalize(want)
-        if list(g.columns) != list(w.columns):
-            failures.append((name, f"schema {list(g.columns)} vs {list(w.columns)}"))
-            print(f"[FAIL] {name}: schema mismatch {list(g.columns)} vs {list(w.columns)}")
-            continue
-        if len(g) != len(w):
-            failures.append((name, f"rows {len(g)} vs {len(w)}"))
-            print(f"[FAIL] {name}: row count {len(g)} vs {len(w)}")
-            continue
-        if not g.equals(w):
-            diff = (g != w).any(axis=1).sum()
-            failures.append((name, f"{diff} differing rows"))
-            print(f"[FAIL] {name}: {diff}/{len(g)} differing rows")
-            bad = (g != w).any(axis=1)
-            print("  got :", g[bad].head(3).to_dict("records"))
-            print("  want:", w[bad].head(3).to_dict("records"))
-            continue
-        print(f"[OK]   {name}: {len(g)} rows match")
+        ok, msg = check_query(spark, con, name, sf_dir, oracles)
+        if ok:
+            print(f"[OK]   {name}: {msg}")
+        else:
+            failures.append(name)
+            print(f"[FAIL] {name}: {msg}")
 
     spark.stop()
     if failures:
-        print(f"\n{len(failures)} FAILURES: {[f[0] for f in failures]}")
+        print(f"\n{len(failures)} FAILURES: {failures}")
         return 1
     print("\nall queries match")
     return 0
