@@ -5,7 +5,8 @@ Prints ONE JSON line:
 
 Also measures the north-rule two-cluster-size proxy when CLD2S_SCALING=1
 (default): the same pipeline job on the same input at N and 4N cores
-(taskset-pinned subprocesses, default 4 vs 16);
+(taskset-pinned subprocesses, default 2 vs 8, lowered until 4N fits the
+box's CPUs: 1 vs 4 on a 4-CPU box);
 scaling efficiency = (throughput@4N / throughput@N) / 4.
 """
 
@@ -46,6 +47,36 @@ SCALING = os.environ.get("CLD2S_SCALING", "1") == "1"
 # the regime a real N- vs 4N-NODE cluster is actually in. Full ladder +
 # both pairs recorded in BENCH/BASELINE.md.
 SCALE_N = int(os.environ.get("CLD2S_SCALE_N", "2"))
+
+# the queries timed after the pipeline, in order (tools/profile_queries.py
+# profiles the same list)
+BENCH_QUERIES = [
+    "scrub_pii", "quality_flags", "conv_rollup", "pricing_summary",
+    "dedup_exact", "minhash_pairs", "token_stats", "ann_cosine",
+    # round 4: streaming replay, media header decode, word-gram jaccard
+    # dedup, sessionization
+    "events_stream", "media_meta", "dedup_jaccard", "event_sessions",
+    "event_asof",
+    # round 5: paragraph dedup + doc reassembly, kmeans+SemDeDup, sequence
+    # packing, decontamination; exact span dedup, funnel, stream-stream
+    # join, PCM sample decode
+    "paragraph_dedup", "semdedup", "seq_pack", "decontam",
+    "dup_spans", "funnel", "events_stream_join", "audio_features",
+    "jpeg_features", "curation_pipeline",
+    # round 6: MJPEG-in-MP4 frame decode, PQ ADC search, bloom-prefiltered
+    # incremental dedup, span cut lists, composite Gopher filter;
+    # distributed BPE, integer-exact classifier training, z-order layout;
+    # winnowing, count-min heavy hitters; TextRank, greedy k-center,
+    # context-window trim, WordPiece, conversation dedup, GIF LZW decode,
+    # repetition battery
+    "video_features", "pq_ann", "dedup_incremental_bloom",
+    "dup_span_cuts", "gopher_quality",
+    "bpe_encode", "classifier_train", "zorder_stats", "lm_score",
+    "unigram_encode",
+    "winnow_fingerprints", "heavy_hitters",
+    "textrank_keywords", "kcenter_select", "context_trim",
+    "wordpiece_encode", "conv_dedup", "gif_features", "rep_ngram_battery",
+]
 
 
 def _sf(sf_dir: str) -> float:
@@ -154,6 +185,15 @@ def _cpu_rotation(cores: int, window: int, total: int = 32) -> str:
     return f"{start}-{total - 1},0-{(start + cores) % total - 1}"
 
 
+def _scale_pair(cpus: int) -> tuple[int, int]:
+    """The N/4N pair for the scaling proxy: CLD2S_SCALE_N, lowered until
+    4N fits in `cpus`, so neither side is over-subscribed (1v4 on 4 CPUs)."""
+    n = min(SCALE_N, cpus // 4)
+    if n < 1:
+        raise ValueError(f"the N/4N scaling pair needs 4 CPUs, have {cpus}")
+    return n, 4 * n
+
+
 def main() -> None:
     if len(sys.argv) > 1 and sys.argv[1] == "--scale-run":
         cores, replicate, sf_dir = int(sys.argv[2]), int(sys.argv[3]), sys.argv[4]
@@ -176,42 +216,7 @@ def main() -> None:
         pipe_sec = min(run_pipeline_timed(spark, df) for _ in range(2))
         queries["keep_drop_pipeline"] = round(pipe_sec, 3)
 
-        for name in ["scrub_pii", "quality_flags", "conv_rollup",
-                     "pricing_summary", "dedup_exact", "minhash_pairs",
-                     "token_stats", "ann_cosine",
-                     # round 4: streaming replay, media header decode,
-                     # word-gram jaccard dedup, sessionization
-                     "events_stream", "media_meta",
-                     "dedup_jaccard", "event_sessions", "event_asof",
-                     # round 5: paragraph dedup + doc reassembly,
-                     # kmeans+SemDeDup, sequence packing, decontamination
-                     "paragraph_dedup", "semdedup", "seq_pack",
-                     "decontam",
-                     # round 5 session 3: exact span dedup, funnel,
-                     # stream-stream join, PCM sample decode
-                     "dup_spans", "funnel", "events_stream_join",
-                     "audio_features", "jpeg_features",
-                     "curation_pipeline",
-                     # round 6: MJPEG-in-MP4 frame decode, PQ ADC search,
-                     # bloom-prefiltered incremental dedup, span cut
-                     # lists, composite Gopher filter
-                     "video_features", "pq_ann",
-                     "dedup_incremental_bloom", "dup_span_cuts",
-                     "gopher_quality",
-                     # round 6 session 4: distributed BPE train+encode,
-                     # integer-exact classifier training, z-order layout
-                     "bpe_encode", "classifier_train", "zorder_stats",
-                     "lm_score", "unigram_encode",
-                     # round 6 session 5: winnowing fingerprints,
-                     # count-min heavy hitters
-                     "winnow_fingerprints", "heavy_hitters",
-                     # round 6 session 6: TextRank keyword PageRank,
-                     # greedy k-center selection, context-window trim,
-                     # WordPiece encode, conversation dedup, GIF LZW
-                     # decode, repetition battery
-                     "textrank_keywords", "kcenter_select",
-                     "context_trim", "wordpiece_encode", "conv_dedup",
-                     "gif_features", "rep_ngram_battery"]:
+        for name in BENCH_QUERIES:
             queries[name] = round(time_query(E.queries()[name], spark, SF_DIR), 3)
     finally:
         spark.stop()
@@ -221,8 +226,10 @@ def main() -> None:
     result["turns_per_sec"] = round(n_turns / pipe_sec, 1)
 
     if SCALING:
+        nproc = len(os.sched_getaffinity(0))
+        total = min(CPUS, nproc)
         try:
-            small, big = SCALE_N, SCALE_N * 4
+            small, big = _scale_pair(total)
             # INTERLEAVED windows (N, 4N, N, 4N, ...): neighbor steal on
             # this shared VM varies minute-to-minute and only ever slows a
             # run, so the min per side across windows estimates true
@@ -241,10 +248,10 @@ def main() -> None:
             max_pairs = int(os.environ.get("CLD2S_SCALE_WINDOWS", "5"))
             for w in range(max_pairs):
                 s, n_sm = run_at_pinned(small, SF_DIR, SCALING_REPLICATE,
-                                        _cpu_rotation(small, w, CPUS))
+                                        _cpu_rotation(small, w, total))
                 secs_sm.append(s)
                 s, n_bg = run_at_pinned(big, SF_DIR, SCALING_REPLICATE,
-                                        _cpu_rotation(big, w, CPUS))
+                                        _cpu_rotation(big, w, total))
                 secs_bg.append(s)
                 est = (min(secs_sm) / min(secs_bg)) / 4.0
                 est_trace.append(round(est, 3))
@@ -259,7 +266,7 @@ def main() -> None:
             s_sm, s_bg = min(secs_sm), min(secs_bg)
             tp_sm, tp_bg = n_sm / s_sm, n_bg / s_bg
             result["scaling"] = {
-                "n_cores": small, "n4_cores": big,
+                "nproc": nproc, "n_cores": small, "n4_cores": big,
                 f"local{small}_sec": round(s_sm, 3), f"local{big}_sec": round(s_bg, 3),
                 f"local{small}_turns_per_sec": round(tp_sm, 1),
                 f"local{big}_turns_per_sec": round(tp_bg, 1),
@@ -271,7 +278,7 @@ def main() -> None:
                            f"local{big}": round(max(secs_bg) / min(secs_bg), 3)},
             }
         except Exception as exc:  # never lose the main JSON line
-            result["scaling"] = {"error": str(exc)[:200],
+            result["scaling"] = {"error": str(exc)[:200], "nproc": nproc,
                                  "note": "see BENCH/BASELINE.md for recorded runs"}
 
     result["metric"] = "keep_drop_pipeline_sec"

@@ -6,7 +6,8 @@ points, re-expressed for DataFrames -- SURVEY.md §2.10):
   kernels.detect.detect_batch       DetectLanguageSummary, vectorized
   functions.langid.detect_udf       DetectLanguage as a Column function
   functions.langid.detect_summary_udf
-  functions.langid.analyze_udf      summary + cross-check + perplexity
+                                    ExtDetectLanguageSummary (+ hint columns)
+  functions.langid.pipeline_udf     summary answer + cross-check + perplexity
   pipeline.stages.run_pipeline      the full per-turn quality filter
   pipeline.run.run_resumable        bucketed, checkpoint-resumable job
   operators.*                       dedup / similarity / textstats / multimodal

@@ -2,8 +2,9 @@
 
 Normalizes the batch once (the expensive shared step) and feeds both the
 CLD2-style detector and the trigram cross-check. This is the single kernel
-behind the Spark `analyze` pandas UDF and the single-node pandas oracle, so
-Spark output and oracle labels agree by construction.
+behind the Spark pipeline's Arrow UDFs (`functions.langid.pipeline_udf`,
+`make_turn_udf`) and the single-node pandas oracle, so Spark output and
+oracle labels agree by construction.
 """
 
 from __future__ import annotations

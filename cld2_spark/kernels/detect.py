@@ -103,7 +103,6 @@ CLOSE_SETS: list[list[str]] = [
     ["no", "nn", "da"], ["gl", "es", "pt"], ["rw", "rn"],
 ]
 
-RTYPE_MANY_GROUPS = [s for s, (name, r, d) in enumerate(ut.SCRIPTS) if r == ut.RTYPE_MANY]
 CJK_SCRIPTS = np.array([ut.SCRIPT_ID[s] for s in ("Hani", "Hira", "Kata", "Bopo")],
                        dtype=np.uint8)
 

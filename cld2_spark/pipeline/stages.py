@@ -12,8 +12,8 @@ Physical shape (designed for 10^12 turns / 1000 executors):
     (`make_turn_udf`): langid + cross-check + perplexity in one
     normalization pass, then the heuristic rules, toxicity and the PII
     scrub on the same Arrow batch (kernels/rules.py); only the decision is
-    whole-stage-codegen SQL. `with_quality`/`with_scrub` keep the Spark SQL
-    rendering of the rules for the standalone queries and layer timings.
+    whole-stage-codegen SQL. `with_quality` keeps the Spark SQL rendering
+    of the rules for the benchmark's layer timings.
   - `partition_for_scale` gives the explicit conv_id hash partitioning +
     salt for mega-conversations demanded by the north rule; per-turn stages
     don't need it (row-local), so it's applied only when downstream
@@ -24,19 +24,17 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from cld2_spark.functions.langid import analyze_udf, make_turn_udf, pipeline_udf
+from cld2_spark.functions.langid import make_turn_udf, pipeline_udf
 from cld2_spark.kernels import quality as Q
-from cld2_spark.kernels import scrub as S
 from cld2_spark.pipeline.decide import decision_columns
 
 LD = "ld"  # struct column name for langid output
 
 
-def with_langid(df: DataFrame, text_col: str = "text", slim: bool = True) -> DataFrame:
-    """Attach the combined langid/cross-check/perplexity struct column.
-    slim=True ships only the columns the decision consumes."""
-    udf = pipeline_udf if slim else analyze_udf
-    return df.withColumn(LD, udf(F.col(text_col)))
+def with_langid(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Attach the combined langid/cross-check/perplexity struct column
+    (PIPELINE_SCHEMA: only the columns the decision consumes)."""
+    return df.withColumn(LD, pipeline_udf(F.col(text_col)))
 
 
 def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -45,25 +43,10 @@ def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
             .withColumn("low_quality", F.expr(Q.low_quality_sql(text_col, "spark"))))
 
 
-def with_scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
-    df = df.withColumn("toxic", F.expr(S.toxicity_sql(text_col, "spark")))
-    return S.scrub_spark_columns(df, text_col, "scrubbed_text")
-
-
-def _answer_field(df: DataFrame) -> str:
-    """The per-turn language ANSWER inside the langid struct: pipeline_udf
-    already maps lang1 = summary_lang; analyze_udf keeps the reference
-    surface (sorted lang1 + separate summary_lang), so the decision must
-    read summary_lang there -- both paths otherwise diverge on A9-demoted
-    rows (and from the single-node oracle)."""
-    fields = [f.name for f in df.schema[LD].dataType.fields]
-    return f"{LD}.summary_lang" if "summary_lang" in fields else f"{LD}.lang1"
-
-
 def with_decision(df: DataFrame) -> DataFrame:
     cols: dict[str, Column] = {
         "too_short": F.col("too_short"),
-        "lang1": F.col(_answer_field(df)),
+        "lang1": F.col(f"{LD}.lang1"),
         "is_reliable": F.col(f"{LD}.is_reliable"),
         "rel1": F.col(f"{LD}.rel1"),
         "ft_lang": F.col(f"{LD}.ft_lang"),
@@ -88,7 +71,7 @@ def run_pipeline(df: DataFrame, text_col: str = "text",
         for c in ("too_short", "low_quality", "toxic", "scrubbed_text")}))
     return out.select(
         "conv_id", "turn_idx",
-        F.col(_answer_field(out)).alias("lang1"),
+        F.col(f"{LD}.lang1").alias("lang1"),
         F.col(f"{LD}.pct1").alias("pct1"),
         F.col(f"{LD}.rel1").alias("rel1"),
         F.col(f"{LD}.is_reliable").alias("is_reliable"),

@@ -9,6 +9,8 @@ import subprocess
 import sys
 from pathlib import Path
 
+import pytest
+
 REPO = Path(__file__).resolve().parent.parent
 
 
@@ -33,13 +35,18 @@ def test_bench_emits_contract_json():
         assert q in d["queries"] and d["queries"][q] > 0
 
 
-def test_cpu_rotation_disjoint_blocks():
-    """Scaling windows must pin DIFFERENT vCPU blocks across windows so
-    per-vCPU hypervisor steal cannot poison every sample of one side."""
+def _bench():
     import importlib.util
     spec = importlib.util.spec_from_file_location("bench", REPO / "bench.py")
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
+    return bench
+
+
+def test_cpu_rotation_disjoint_blocks():
+    """Scaling windows must pin DIFFERENT vCPU blocks across windows so
+    per-vCPU hypervisor steal cannot poison every sample of one side."""
+    bench = _bench()
     rot4 = [bench._cpu_rotation(4, w, 32) for w in range(5)]
     assert rot4 == ["0-3", "4-7", "8-11", "12-15", "16-19"]
     assert len(set(rot4)) == 5
@@ -47,3 +54,26 @@ def test_cpu_rotation_disjoint_blocks():
     assert rot16 == ["0-15", "16-31", "0-15"]
     # wraparound block stays well-formed
     assert bench._cpu_rotation(12, 2, 32) == "24-31,0-3"
+
+
+def _cpus(cpu_list: str) -> list[int]:
+    out = []
+    for part in cpu_list.split(","):
+        lo, hi = (int(x) for x in part.split("-"))
+        assert lo <= hi, cpu_list
+        out.extend(range(lo, hi + 1))
+    return out
+
+
+@pytest.mark.parametrize("total,pair", [(4, (1, 4)), (8, (2, 8))])
+def test_scale_pair_fits_small_boxes(total, pair):
+    """On boxes with fewer than 8 CPUs the N/4N pair shrinks so 4N fits
+    (the fixed 2v8 pair gave taskset "0-3,0--1" on 4 CPUs), and every
+    window pins a valid, in-range CPU list of the right size."""
+    bench = _bench()
+    assert bench._scale_pair(total) == pair
+    for cores in pair:
+        for w in range(5):
+            cpus = _cpus(bench._cpu_rotation(cores, w, total))
+            assert len(set(cpus)) == cores
+            assert all(0 <= c < total for c in cpus)

@@ -109,11 +109,14 @@ def test_ext_hint_udf(spark):
 
 
 def test_hint_udf_roundtrip(spark):
+    """The ext UDF with only the language hint column (the hints that
+    follow the text column are positional: lang, content_language, tld,
+    encoding)."""
     from pyspark.sql import functions as F
-    from cld2_spark.functions.langid import detect_summary_hinted_udf
+    from cld2_spark.functions.langid import detect_summary_ext_udf
     hr = _corpus_text("hr_Latn")
     df = spark.createDataFrame([(hr, "bs"), (CLEAR_EN, "fr"), (CLEAR_EN, None)],
                                "text string, hint string")
-    out = (df.withColumn("ld", detect_summary_hinted_udf(F.col("text"), F.col("hint")))
+    out = (df.withColumn("ld", detect_summary_ext_udf(F.col("text"), F.col("hint")))
            .select(F.col("ld.lang1").alias("lang1")).toPandas())
     assert out.lang1.tolist() == ["bs", "en", "en"]

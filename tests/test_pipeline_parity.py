@@ -128,14 +128,10 @@ def test_null_text_is_empty_text(spark):
                                   check_dtype=False)
 
 
-def test_slim_and_full_langid_paths_decide_identically(spark):
-    """with_langid(slim=False) attaches the full analyze struct (sorted
-    lang1 + separate summary_lang); the decision must read the summary
-    answer there, agreeing with the slim path on every row -- including
-    A9-demoted docs where sorted lang1 != summary_lang (round-3 review)."""
-    from pyspark.sql import functions as F
-    from cld2_spark.pipeline.stages import (with_decision, with_langid,
-                                            with_quality, with_scrub)
+def test_a9_demoted_turn_matches_oracle(spark):
+    """The pipeline's per-turn lang1 is the summary answer, which can
+    differ from the sorted lang1 after an A9 boilerplate demotion: English
+    boilerplate plus French answers `fr`, as in the oracle."""
     en_head = ("France is the largest country in western europe and the "
                "third largest overall. ")
     fr = ("le conseil municipal a décidé de restaurer les fontaines du "
@@ -145,17 +141,16 @@ def test_slim_and_full_langid_paths_decide_identically(spark):
     rows = [("c1", 0, "user", en_head + fr, "", None),
             ("c1", 1, "assistant", fr, "", None),
             ("c2", 0, "user", "short", "", None)]
+    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    want = oracle_labels(pd.DataFrame(rows, columns=cols))
+    assert want["lang1"].tolist()[:2] == ["fr", "fr"]
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, "
               "tool string, ts timestamp")
-
-    def verdicts(slim):
-        out = with_decision(with_scrub(with_quality(
-            with_langid(df, slim=slim))))
-        return (out.orderBy("conv_id", "turn_idx")
-                .select("keep", "drop_reason").collect())
-
-    assert verdicts(True) == verdicts(False)
+    got = (run_pipeline(df).toPandas()
+           .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
+    pd.testing.assert_frame_equal(got[list(want.columns)], want,
+                                  check_dtype=False)
 
 
 def test_crosscheck_stream_reuse():

@@ -7,7 +7,7 @@ own job group so the Spark job count is attributable, plus the
   {"query": name, "sec": t, "n_jobs": j, "warm_sec": t0}
 
 Usage:
-  python tools/profile_queries.py [query ...]        # default: bench list
+  python tools/profile_queries.py [query ...]   # default: bench.BENCH_QUERIES
   CLD2S_PROFILE_PLANS=plans/r07 python tools/profile_queries.py semdedup
 """
 
@@ -27,23 +27,10 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 PLAN_DIR = os.environ.get("CLD2S_PROFILE_PLANS", "")
 SUFFIX = os.environ.get("CLD2S_PROFILE_SUFFIX", "before")
 
-BENCH_QUERIES = [
-    "scrub_pii", "quality_flags", "conv_rollup", "pricing_summary",
-    "dedup_exact", "minhash_pairs", "token_stats", "ann_cosine",
-    "events_stream", "media_meta", "dedup_jaccard", "event_sessions",
-    "event_asof", "paragraph_dedup", "semdedup", "seq_pack", "decontam",
-    "dup_spans", "funnel", "events_stream_join", "audio_features",
-    "jpeg_features", "curation_pipeline", "video_features", "pq_ann",
-    "dedup_incremental_bloom", "dup_span_cuts", "gopher_quality",
-    "bpe_encode", "classifier_train", "zorder_stats", "lm_score",
-    "unigram_encode", "winnow_fingerprints", "heavy_hitters",
-    "textrank_keywords", "kcenter_select", "context_trim",
-    "wordpiece_encode", "conv_dedup", "gif_features", "rep_ngram_battery",
-]
-
 
 def main() -> None:
     import __spark_entry__ as E
+    from bench import BENCH_QUERIES
     from cld2_spark.session import get_spark
 
     names = sys.argv[1:] or BENCH_QUERIES

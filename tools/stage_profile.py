@@ -1,7 +1,8 @@
 """Stage-level profiler: runs named queries with the Spark event log on,
 then reports per-query stage durations and task counts — the tool that
-finds stages AQE has coalesced into too few tasks for their compute
-(bench.py stays frozen; guide §1/§7).
+finds stages AQE has coalesced into too few tasks for their compute.
+The session comes from `session.get_spark`, as in bench.py, so the
+profile sees the bench's configuration.
 
 Usage: python tools/stage_profile.py <query> [query ...]
 """
@@ -29,22 +30,17 @@ def main() -> None:
     os.makedirs(EVDIR, exist_ok=True)
     for f in Path(EVDIR).glob("*"):
         subprocess.run(["rm", "-rf", str(f)])
-    from pyspark.sql import SparkSession
-
+    # the bench's session (get_spark), plus the event log: spark-submit
+    # reads PYSPARK_SUBMIT_ARGS when the JVM starts
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join([
+        "--conf spark.eventLog.enabled=true",
+        f"--conf spark.eventLog.dir={EVDIR}",
+        "--conf spark.eventLog.compress=false",
+        os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")])
     import __spark_entry__ as E
+    from cld2_spark.session import get_spark
 
-    spark = (SparkSession.builder.master(f"local[{CPUS}]")
-             .appName("stage-profile")
-             .config("spark.sql.shuffle.partitions", str(CPUS))
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.driver.memory", "8g")
-             .config("spark.eventLog.enabled", "true")
-             .config("spark.eventLog.dir", EVDIR)
-             .config("spark.eventLog.compress", "false")
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
+    spark = get_spark("stage-profile", cores=CPUS, shuffle_partitions=CPUS)
     qs = E.queries()
     sc = spark.sparkContext
     names = sys.argv[1:]
