@@ -37,7 +37,7 @@ import numpy as np
 
 from . import text as T
 from . import unicode_tables as ut
-from .hashes import quad_hash_v2
+from .hashes import bi_hash_v2, quad_hash_v2
 from .model import Cld2sModel
 
 QUAD_CHUNK = 20   # quads per scored chunk (internal/scoreonescriptspan.h:91)
@@ -298,12 +298,12 @@ def resolve_hints(model, hints: list) -> tuple[np.ndarray, np.ndarray]:
             if gid is not None:
                 merge(gid, LANGUAGE_HINT_WEIGHT)
         cl = h.get("content_language")
-        if cl and ht is not None:
+        if cl:
             for tag in str(cl).split(","):
                 for gid, w in ht.lookup_tag(tag):
                     merge(gid, w)
         tld = h.get("tld")
-        if tld and ht is not None:
+        if tld:
             for gid, w in ht.lookup_tld(str(tld)):
                 merge(gid, w)
         enc = h.get("encoding")
@@ -375,14 +375,6 @@ def quad_and_word_grams(arr: np.ndarray, rid_s: np.ndarray,
         return _empty_quads(), (z, zu, zu, z)
     return (_quads_from_walk(walk, arr, rid_s, vowel_skip),
             _words_from_walk(walk, rid_s))
-
-
-def cjk_bigram_hash(cp1: np.ndarray, cp2: np.ndarray) -> np.ndarray:
-    """Deterministic 32-bit combine of two adjacent CJK codepoints (J4 key;
-    the reference hashes the UTF-8 bytes via BiHashV2 -- our table is
-    self-trained so a codepoint-domain mix is equivalent and cheaper)."""
-    h = (cp1.astype(np.uint32) * np.uint32(0x9E3779B1)) ^ cp2.astype(np.uint32)
-    return h | np.uint32(1)  # never 0 (0 = empty slot)
 
 
 def row_dedupe_filter(h: np.ndarray, g_rid: np.ndarray, max_occ: int = 2) -> np.ndarray:
@@ -467,15 +459,14 @@ def _pad_slots(langs: np.ndarray, qprobs: np.ndarray, width: int):
 
 
 def _score_hits(g_rid, langs3, qprobs3, gram_bytes, chunk_size, n_rows, n_langs, acc,
-                hint_lid=None, whack_map=None, expected=None, closeset=None,
+                hint_lid=None, whack_map=None, closeset=None,
                 gpos=None, span_sink=None, distinct_mask=None, seg_rid=None):
     """Chunked scatter-add scoring: the Tote/DocTote pipeline (A1-A3).
 
     g_rid must be sorted ascending. Chunk winner takes the chunk's byte span;
-    per-chunk reliability = min(ReliabilityDelta, ReliabilityExpected)
-    (SetChunkSummary + SummaryBufferToDocTote,
-    internal/scoreonescriptspan.cc:60-96,305-315), with the delta forced to
-    100 when the chunk's top two languages are in the same close set.
+    per-chunk reliability is ReliabilityDelta (SetChunkSummary,
+    internal/scoreonescriptspan.cc:60-96), forced to 100 when the chunk's
+    top two languages are in the same close set.
     hint_lid is a (ids (n,4), weights (n,4)) prior pair from resolve_hints:
     each prior adds its weight as a vote to every chunk of the row (J8:
     hints bias, never force -- public/compact_lang_det.h:133-138).
@@ -670,25 +661,8 @@ def _score_hits(g_rid, langs3, qprobs3, gram_bytes, chunk_size, n_rows, n_langs,
     if closeset is not None:
         same = (closeset[win] > 0) & (closeset[win] == closeset[win2])
         rel = np.where(same, maxrel, rel)
-    # per-chunk ReliabilityExpected: actual = (score1 << 10) / bytes vs the
-    # winner's expected score/KB; chunk reliability is the MIN of the two
-    # (SummaryBufferToDocTote, internal/scoreonescriptspan.cc:305-315).
-    # NOTE: only sound when chunk scores have a stable scale; our
-    # self-trained quad table varies ~1.9x between seen and unseen text
-    # (build_model.py calibration), so detect_batch keeps this check at the
-    # document level (expected=None here) -- measured: enabling it per
-    # chunk costs 9 corpus cases to over-deletion.
-    if expected is not None:
-        e = expected[win].astype(np.int64)
-        a_kb = np.where(cb > 0, (s1.astype(np.int64) << 10) // np.maximum(cb, 1), 0)
-        ratio = np.where((a_kb > 0) & (e > 0),
-                         np.maximum(a_kb, e) / np.maximum(np.minimum(a_kb, e), 1), 1.0)
-        rel_score = np.where(e == 0, 100,
-                             np.where(a_kb == 0, 0,
-                                      np.where(ratio <= 1.5, 100,
-                                               np.where(ratio > 4.0, 0,
-                                                        100.0 * (4.0 - ratio) / 2.5)))).astype(np.int64)
-        rel = np.minimum(rel, rel_score)
+    # ReliabilityExpected runs per document (_extract), not per chunk:
+    # per chunk it measured 9 corpus cases lost to over-deletion
 
     # chunks where nothing scored attribute NO bytes (argmax of an all-zero
     # tote is meaningless; the reference never reaches this because every
@@ -815,7 +789,7 @@ def _sharpen_boundaries(cid, cr, win, scored, langs3, qprobs3, gram_bytes,
 
 
 def _score_othr_bank(streams, orig_s, n_rows, n_langs, acc, hint_lid,
-                     whack_map, expected, closeset, span_sink) -> None:
+                     whack_map, closeset, span_sink) -> None:
     """Score the non-Latin script streams with ONE shared W5 ring bank.
 
     The reference keeps exactly two distinct-boost rings per document:
@@ -836,7 +810,7 @@ def _score_othr_bank(streams, orig_s, n_rows, n_langs, acc, hint_lid,
             gpos = np.where(s_pos >= 0, orig_s[safe], np.int64(-1))
         _score_hits(s_rid, langs3, qprobs3, s_gb, QUAD_CHUNK, n_rows,
                     n_langs, acc, hint_lid=hint_lid, whack_map=whack_map,
-                    expected=expected, closeset=closeset, gpos=gpos,
+                    closeset=closeset, gpos=gpos,
                     span_sink=span_sink, distinct_mask=dmask)
         return
     width = max(st[2].shape[1] for st in streams)
@@ -884,13 +858,13 @@ def _score_othr_bank(streams, orig_s, n_rows, n_langs, acc, hint_lid,
         gpos = np.where(all_pos >= 0, orig_s[safe], np.int64(-1))
     _score_hits(g_rid, langs3, qprobs3, s_gb, QUAD_CHUNK, n_rows, n_langs,
                 acc, hint_lid=hint_lid, whack_map=whack_map,
-                expected=expected, closeset=closeset, gpos=gpos,
+                closeset=closeset, gpos=gpos,
                 span_sink=span_sink, distinct_mask=dmask, seg_rid=seg)
 
 
 def detect_batch(texts: list[str], model: Cld2sModel | None = None,
                  return_raw: bool = False, nb: T.NormBatch | None = None,
-                 lang_hints: list | None = None, hints: list | None = None,
+                 hints: list | None = None,
                  return_spans: bool = False, best_effort: bool = False,
                  score_as_quads: bool = False, is_plain_text: bool = True,
                  _repeats: bool = False, _retry: bool = True,
@@ -945,7 +919,6 @@ def detect_batch(texts: list[str], model: Cld2sModel | None = None,
             gid = model.lang_id.get(c)
             if gid is not None:
                 closeset[gid] = si
-    expected = None  # see note in _score_hits: doc-level check only
     # languages corroborated by a reference word-table hit, per row --
     # gates the A9 boilerplate demotion (see _extract)
     word_ev = np.zeros((n, L), dtype=bool)
@@ -954,8 +927,6 @@ def detect_batch(texts: list[str], model: Cld2sModel | None = None,
 
     hint_lid = None
     whack_map = None
-    if hints is None and lang_hints is not None:
-        hints = [{"lang": h} if h else None for h in lang_hints]
     if hints is not None:
         hint_lid = resolve_hints(model, hints)
         whack_map = {}
@@ -1023,9 +994,6 @@ def detect_batch(texts: list[str], model: Cld2sModel | None = None,
     if _stream_cache is not None:
         many = _stream_cache[0]["many"]
     if many:
-        use_ref_words = model.ref_word_delta is not None
-        have_words = use_ref_words or model.words is not None
-        use_backoff = best_effort and bool(model.quad_backoff)
         if _stream_cache is not None:
             C, sub_rows = _stream_cache
             scr_s, orig_s = C["scr_s"], C["orig_s"]
@@ -1042,33 +1010,29 @@ def detect_batch(texts: list[str], model: Cld2sModel | None = None,
             buf = C["buf"]
             if C["h3"] is not None:
                 h3 = C["h3"][gsel]
-            elif use_backoff:
+            elif best_effort:
                 # pass 1 ran without bestEffort and skipped the backoff
                 # hash; the byte offsets address the CACHED full-stream
                 # buffer, so the subset's J2 keys hash directly from it
                 h3 = quad_hash_v2(buf, bs, tri_len)
             else:
                 h3 = None
-            if have_words:
-                wsel = rlut[C["w_rid"]]
-                w_rid = remap[C["w_rid"][wsel]].astype(C["w_rid"].dtype)
-                wh40, pair40, wpos = (C["wh40"][wsel], C["pair40"][wsel],
-                                      C["wpos"][wsel])
+            wsel = rlut[C["w_rid"]]
+            w_rid = remap[C["w_rid"][wsel]].astype(C["w_rid"].dtype)
+            wh40, pair40, wpos = (C["wh40"][wsel], C["pair40"][wsel],
+                                  C["wpos"][wsel])
         else:
             arr, rid_s, scr_s, orig_s = T.group_stream_with_script(
                 nb, np.array(many, dtype=np.uint8))
-            if have_words:
-                ((g_rid, bs, bl, buf, gb, pos, tri_len),
-                 (w_rid, wh40, pair40, wpos)) = quad_and_word_grams(
-                    arr, rid_s, vowel_skip=QUAD_WALK_VOWEL)
-            else:
-                g_rid, bs, bl, buf, gb, pos, tri_len = quad_grams(arr, rid_s)
+            ((g_rid, bs, bl, buf, gb, pos, tri_len),
+             (w_rid, wh40, pair40, wpos)) = quad_and_word_grams(
+                arr, rid_s, vowel_skip=QUAD_WALK_VOWEL)
             if len(g_rid):
                 h = quad_hash_v2(buf, bs, bl)
                 # J2 backoff key (prefix trigram): only ever consumed under
                 # bestEffort with a backoff table -- skip the second
                 # full-stream hash pass on the default hot path
-                h3 = quad_hash_v2(buf, bs, tri_len) if use_backoff else None
+                h3 = quad_hash_v2(buf, bs, tri_len) if best_effort else None
         if len(g_rid):
             if _retry and not _repeats:
                 stream_cache = {
@@ -1086,10 +1050,8 @@ def detect_batch(texts: list[str], model: Cld2sModel | None = None,
                     # group_stream + encode_utf8 passes
                     "arr": arr if _stream_cache is None else None,
                     "rid_s": rid_s if _stream_cache is None else None,
-                    "w_rid": w_rid if have_words else None,
-                    "wh40": wh40 if have_words else None,
-                    "pair40": pair40 if have_words else None,
-                    "wpos": wpos if have_words else None,
+                    "w_rid": w_rid, "wh40": wh40, "pair40": pair40,
+                    "wpos": wpos,
                 }
                 if _export_cache is not None:
                     _export_cache.update(stream_cache)
@@ -1100,11 +1062,6 @@ def detect_batch(texts: list[str], model: Cld2sModel | None = None,
             if h3 is not None:
                 h3 = h3[keep]
             g_script = scr_s[pos]
-            if have_words and not use_ref_words:
-                from .hashes import fold40_to_32
-                w32 = fold40_to_32(wh40)
-                pair32 = np.where(pair40 != 0, fold40_to_32(pair40),
-                                  np.uint32(0))
             nl_streams: list[tuple] = []  # non-Latin: shared "othr" ring bank
             for s in many:
                 m = g_script == s
@@ -1121,8 +1078,8 @@ def detect_batch(texts: list[str], model: Cld2sModel | None = None,
                 # consulted only under bestEffort ("give best-effort answer")
                 # -- measured: +4 held-out cases there, -1 on the default
                 # path (documented deviation; PARITY.md).
-                bt = (model.quad_backoff or {}).get(ut.SCRIPTS[s][0]) \
-                    if use_backoff else None
+                bt = model.quad_backoff.get(ut.SCRIPTS[s][0]) \
+                    if best_effort else None
                 if bt is not None and not found.all():
                     miss = ~found
                     _, bl3, bq3 = bt.probe(h3[m][miss])
@@ -1146,68 +1103,48 @@ def detect_batch(texts: list[str], model: Cld2sModel | None = None,
                                  np.full((k, 1), seed_gid, dtype=np.uint8),
                                  np.ones((k, 1), dtype=np.uint8),
                                  np.zeros(k, dtype=np.int32), None))
-                if have_words and len(w_rid):
+                if len(w_rid):
                     wm = scr_s[wpos] == s
                     keep_w = repeat_filter(wh40, w_rid) & wm
                     if _repeats:
                         keep_w &= predicted_filter(wh40, w_rid)
-                    if use_ref_words:
-                        # reference deltaocta (word), distinctocta (word +
-                        # word-pair), GetOctaHits internal/cldutil.cc:416-533.
-                        # Distinct hits are flagged: _score_hits re-adds the
-                        # last <=4 of them to every chunk's tote until ring
-                        # eviction (W5 exact, AddDistinctBoost2/ScoreBoosts,
-                        # internal/scoreonescriptspan.cc:112-152).
-                        probes = [(wh40, model.ref_word_delta, False),
-                                  (wh40, model.ref_word_distinct, True),
-                                  (pair40, model.ref_word_distinct, True)]
-                        for wh, rt, dis in probes:
-                            if rt is None:
-                                continue
-                            sel = keep_w & (wh != 0)
-                            if not sel.any():
-                                continue
-                            fnd, wl, wq = rt.probe_octa(wh[sel], latin)
-                            if not fnd.any():
-                                continue
-                            # misses never enter the hit stream: the
-                            # reference's hitbuffer stores delta/distinct
-                            # entries only on table hits (GetOctaHits,
-                            # internal/cldutil.cc:416-533) -- and word-
-                            # table miss rates run ~99% on transcripts,
-                            # so dropping them here shrinks the scoring
-                            # stream ~2x
-                            wl, wq = wl[fnd], wq[fnd]
-                            rows_w = w_rid[sel][fnd]
-                            wpos_f = wpos[sel][fnd]
-                            for j in range(wl.shape[1]):
-                                ev = (wq[:, j] > 0) & (wl[:, j] < L)
-                                if ev.any():
-                                    word_ev[rows_w[ev], wl[:, j][ev]] = True
-                            zero = np.zeros(len(rows_w), dtype=np.int32)
-                            # only ACTUAL table hits enter the ring; a
-                            # found slot can still decode to all-zero
-                            # qprobs and must not evict
-                            hitmask = (wq > 0).any(axis=1) if dis else None
-                            hits.append((rows_w, wpos_f, wl, wq, zero,
-                                         hitmask))
-                    else:
-                        for wh in (w32, pair32):
-                            sel = keep_w & (wh != 0)
-                            if not sel.any():
-                                continue
-                            fnd, wl3, wq3 = model.words.probe(wh[sel])
-                            if not fnd.any():
-                                continue
-                            wl3, wq3 = wl3[fnd], wq3[fnd]
-                            rows_w = w_rid[sel][fnd]
-                            for j in range(wl3.shape[1]):
-                                ev = (wq3[:, j] > 0) & (wl3[:, j] < L)
-                                if ev.any():
-                                    word_ev[rows_w[ev], wl3[:, j][ev]] = True
-                            hits.append((rows_w, wpos[sel][fnd], wl3, wq3,
-                                         np.zeros(len(rows_w), dtype=np.int32),
-                                         None))
+                    # reference deltaocta (word), distinctocta (word +
+                    # word-pair), GetOctaHits internal/cldutil.cc:416-533.
+                    # Distinct hits are flagged: _score_hits re-adds the
+                    # last <=4 of them to every chunk's tote until ring
+                    # eviction (W5 exact, AddDistinctBoost2/ScoreBoosts,
+                    # internal/scoreonescriptspan.cc:112-152).
+                    probes = [(wh40, model.ref_word_delta, False),
+                              (wh40, model.ref_word_distinct, True),
+                              (pair40, model.ref_word_distinct, True)]
+                    for wh, rt, dis in probes:
+                        sel = keep_w & (wh != 0)
+                        if not sel.any():
+                            continue
+                        fnd, wl, wq = rt.probe_octa(wh[sel], latin)
+                        if not fnd.any():
+                            continue
+                        # misses never enter the hit stream: the
+                        # reference's hitbuffer stores delta/distinct
+                        # entries only on table hits (GetOctaHits,
+                        # internal/cldutil.cc:416-533) -- and word-
+                        # table miss rates run ~99% on transcripts,
+                        # so dropping them here shrinks the scoring
+                        # stream ~2x
+                        wl, wq = wl[fnd], wq[fnd]
+                        rows_w = w_rid[sel][fnd]
+                        wpos_f = wpos[sel][fnd]
+                        for j in range(wl.shape[1]):
+                            ev = (wq[:, j] > 0) & (wl[:, j] < L)
+                            if ev.any():
+                                word_ev[rows_w[ev], wl[:, j][ev]] = True
+                        zero = np.zeros(len(rows_w), dtype=np.int32)
+                        # only ACTUAL table hits enter the ring; a
+                        # found slot can still decode to all-zero
+                        # qprobs and must not evict
+                        hitmask = (wq > 0).any(axis=1) if dis else None
+                        hits.append((rows_w, wpos_f, wl, wq, zero,
+                                     hitmask))
                 dmask = None
                 if hits:
                     width = max(x[2].shape[1] for x in hits)
@@ -1240,51 +1177,39 @@ def detect_batch(texts: list[str], model: Cld2sModel | None = None,
                         gpos = np.where(s_pos >= 0, orig_s[safe], np.int64(-1))
                     _score_hits(s_rid, langs3, qprobs3, s_gb, QUAD_CHUNK, n, L,
                                 acc, hint_lid=hint_lid, whack_map=whack_map,
-                                expected=expected, closeset=closeset,
+                                closeset=closeset,
                                 gpos=gpos, span_sink=span_sink,
                                 distinct_mask=dmask)
                 else:
                     nl_streams.append(
                         (s_rid, s_pos, langs3, qprobs3, s_gb, dmask))
             _score_othr_bank(nl_streams, orig_s, n, L, acc, hint_lid,
-                             whack_map, expected, closeset, span_sink)
+                             whack_map, closeset, span_sink)
 
     # CJK pass: unigram hits (J3) + adjacent-pair bigram delta hits (J4)
-    # merged into one chunk stream. With reference tables: unigrams via the
-    # flattened CjkUni DFA, bigrams via bit-exact BiHashV2 over the UTF-8
-    # bytes of the two chars probed into kCjkDeltaBi (GetBiHits,
-    # internal/cldutil.cc:248-310).
-    use_ref_cjk = model.ref_cjk_uni is not None
-    if (use_ref_cjk or model.cjk_uni is not None) and len(present_scripts) and \
-            np.isin(CJK_SCRIPTS, present_scripts).any():
+    # merged into one chunk stream: unigrams via the flattened CjkUni DFA,
+    # bigrams via bit-exact BiHashV2 over the UTF-8 bytes of the two chars
+    # probed into kCjkDeltaBi (GetBiHits, internal/cldutil.cc:248-310).
+    if len(present_scripts) and np.isin(CJK_SCRIPTS, present_scripts).any():
         mask = nb.letter & np.isin(nb.script, CJK_SCRIPTS)
         if mask.any():
             idx = np.flatnonzero(mask)
             cps = nb.cp[idx]
             g_rid = nb.rid[idx]
-            if use_ref_cjk:
-                found, langs3, qprobs3 = model.ref_cjk_uni.probe(cps)
-            else:
-                found, langs3, qprobs3 = model.cjk_uni.probe(cps)
+            found, langs3, qprobs3 = model.ref_cjk_uni.probe(cps)
             gb = u8len[idx].astype(np.int32)
             bi_hits = None
             if len(idx) > 1:
                 adj = (idx[1:] == idx[:-1] + 1) & (g_rid[1:] == g_rid[:-1])
                 if adj.any():
                     a = np.flatnonzero(adj)
-                    if model.ref_cjk_bi is not None:
-                        from .hashes import bi_hash_v2
-                        boff = T.utf8_offsets(cps)
-                        buf = T.encode_utf8(cps)
-                        bstart = boff[a]
-                        blen = boff[a + 2] - bstart  # two chars, <= 8 bytes
-                        bih = bi_hash_v2(buf, bstart, blen)
-                        _, bl3, bq3 = model.ref_cjk_bi.probe_quad(bih, latin=False)
-                        bi_hits = (a, bl3, bq3)
-                    elif model.cjk_bi is not None:
-                        bih = cjk_bigram_hash(cps[a], cps[a + 1])
-                        _, bl3, bq3 = model.cjk_bi.probe(bih)
-                        bi_hits = (a, bl3, bq3)
+                    boff = T.utf8_offsets(cps)
+                    buf = T.encode_utf8(cps)
+                    bstart = boff[a]
+                    blen = boff[a + 2] - bstart  # two chars, <= 8 bytes
+                    bih = bi_hash_v2(buf, bstart, blen)
+                    _, bl3, bq3 = model.ref_cjk_bi.probe_quad(bih, latin=False)
+                    bi_hits = (a, bl3, bq3)
             streams = [(g_rid, idx.astype(np.int64), langs3, qprobs3, gb)]
             if bi_hits is not None:
                 a, bl3, bq3 = bi_hits
@@ -1316,7 +1241,7 @@ def detect_batch(texts: list[str], model: Cld2sModel | None = None,
                 cpos = all_pos[order]
             _score_hits(g_rid, langs3, qprobs3, gb, UNI_CHUNK, n, L, acc,
                         hint_lid=hint_lid, whack_map=whack_map,
-                        expected=expected, closeset=closeset,
+                        closeset=closeset,
                         gpos=cpos if span_sink is not None else None,
                         span_sink=span_sink)
 
@@ -1513,53 +1438,51 @@ def _remove_unreliable(model, bytes_rl, score_rl, relw_rl, onebytes_rl) -> None:
     # full (n, L) matrices (bandwidth: the full-matrix form measurably
     # hurt 4->16-core scaling)
     rows0, langs0 = np.nonzero(bytes_rl > 0)
-    alt = model.closest_alt
-    if alt is not None:
-        L = bytes_rl.shape[1]
-        alt64 = alt.astype(np.int64)
-        # bounded merge rounds: one merge per row per round avoids endpoint
-        # write conflicts (the reference scans slots sequentially)
-        for _ in range(4):
-            b0 = bytes_rl[rows0, langs0]
-            relpct0 = relw_rl[rows0, langs0] // np.maximum(b0, 1)
-            m0 = (b0 > 0) & (relpct0 < MIN_RELIABLE_KEEP_PERCENT)
-            rows, langs = rows0[m0], langs0[m0]
-            if len(rows) == 0:
-                break
-            a = alt64[langs]
-            ok = a >= 0
-            rows, langs, a = rows[ok], langs[ok], a[ok]
-            if len(rows) == 0:
-                break
-            ok = bytes_rl[rows, a] > 0
-            rows, langs, a = rows[ok], langs[ok], a[ok]
-            if len(rows) == 0:
-                break
-            # dedupe reversed pairs, then one merge per row this round
-            lo, hi = np.minimum(langs, a), np.maximum(langs, a)
-            key = rows.astype(np.int64) * (L * L) + lo * L + hi
-            _, fi = np.unique(key, return_index=True)
-            rows, langs, a = rows[fi], langs[fi], a[fi]
-            _, ri = np.unique(rows, return_index=True)
-            rows, langs, a = rows[ri], langs[ri], a[ri]
-            rel_l = relw_rl[rows, langs] // np.maximum(bytes_rl[rows, langs], 1)
-            rel_a = relw_rl[rows, a] // np.maximum(bytes_rl[rows, a], 1)
-            into_lang = (rel_a < rel_l) | ((rel_a == rel_l) & (langs < a))
-            to = np.where(into_lang, langs, a)
-            frm = np.where(into_lang, a, langs)
-            newpct = np.maximum(np.maximum(rel_l, rel_a),
-                                MIN_RELIABLE_KEEP_PERCENT)
-            newbytes = bytes_rl[rows, langs] + bytes_rl[rows, a]
-            newscore = score_rl[rows, langs] + score_rl[rows, a]
-            newone = onebytes_rl[rows, langs] + onebytes_rl[rows, a]
-            bytes_rl[rows, frm] = 0
-            score_rl[rows, frm] = 0
-            onebytes_rl[rows, frm] = 0
-            relw_rl[rows, frm] = 0
-            bytes_rl[rows, to] = newbytes
-            score_rl[rows, to] = newscore
-            onebytes_rl[rows, to] = newone
-            relw_rl[rows, to] = newpct * newbytes
+    L = bytes_rl.shape[1]
+    alt64 = model.closest_alt.astype(np.int64)
+    # bounded merge rounds: one merge per row per round avoids endpoint
+    # write conflicts (the reference scans slots sequentially)
+    for _ in range(4):
+        b0 = bytes_rl[rows0, langs0]
+        relpct0 = relw_rl[rows0, langs0] // np.maximum(b0, 1)
+        m0 = (b0 > 0) & (relpct0 < MIN_RELIABLE_KEEP_PERCENT)
+        rows, langs = rows0[m0], langs0[m0]
+        if len(rows) == 0:
+            break
+        a = alt64[langs]
+        ok = a >= 0
+        rows, langs, a = rows[ok], langs[ok], a[ok]
+        if len(rows) == 0:
+            break
+        ok = bytes_rl[rows, a] > 0
+        rows, langs, a = rows[ok], langs[ok], a[ok]
+        if len(rows) == 0:
+            break
+        # dedupe reversed pairs, then one merge per row this round
+        lo, hi = np.minimum(langs, a), np.maximum(langs, a)
+        key = rows.astype(np.int64) * (L * L) + lo * L + hi
+        _, fi = np.unique(key, return_index=True)
+        rows, langs, a = rows[fi], langs[fi], a[fi]
+        _, ri = np.unique(rows, return_index=True)
+        rows, langs, a = rows[ri], langs[ri], a[ri]
+        rel_l = relw_rl[rows, langs] // np.maximum(bytes_rl[rows, langs], 1)
+        rel_a = relw_rl[rows, a] // np.maximum(bytes_rl[rows, a], 1)
+        into_lang = (rel_a < rel_l) | ((rel_a == rel_l) & (langs < a))
+        to = np.where(into_lang, langs, a)
+        frm = np.where(into_lang, a, langs)
+        newpct = np.maximum(np.maximum(rel_l, rel_a),
+                            MIN_RELIABLE_KEEP_PERCENT)
+        newbytes = bytes_rl[rows, langs] + bytes_rl[rows, a]
+        newscore = score_rl[rows, langs] + score_rl[rows, a]
+        newone = onebytes_rl[rows, langs] + onebytes_rl[rows, a]
+        bytes_rl[rows, frm] = 0
+        score_rl[rows, frm] = 0
+        onebytes_rl[rows, frm] = 0
+        relw_rl[rows, frm] = 0
+        bytes_rl[rows, to] = newbytes
+        score_rl[rows, to] = newscore
+        onebytes_rl[rows, to] = newone
+        relw_rl[rows, to] = newpct * newbytes
     b0 = bytes_rl[rows0, langs0]
     relpct0 = relw_rl[rows0, langs0] // np.maximum(b0, 1)
     kill = (b0 > 0) & (relpct0 < MIN_RELIABLE_KEEP_PERCENT)

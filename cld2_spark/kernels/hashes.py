@@ -158,11 +158,3 @@ def pair_hash(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     a = a.astype(np.uint64)
     return (((a >> np.uint64(13)) | (a << np.uint64(51))) + b.astype(np.uint64)).astype(np.uint64)
 
-
-def fold40_to_32(h: np.ndarray) -> np.ndarray:
-    """Fold a 40-bit OctaHash40 value to 32 bits for table keying (our
-    tables store 32-bit keys; the reference instead splits hash bits between
-    key and bucket subscript, internal/cldutil_shared.h:380-397)."""
-    h = h.astype(np.uint64)
-    return ((h ^ (h >> np.uint64(8))) & np.uint64(0xFFFFFFFF)).astype(np.uint32)
-

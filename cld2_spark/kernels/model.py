@@ -10,6 +10,14 @@ up to 3 (language, quantized-log-prob) pairs -- the payload CLD2 packs into a
 kLgProbV2Tbl at internal/cldutil_shared.h:42-308). Quantization unit matches
 the reference: one step = a factor of 2**1.6 (~3.03), values 1..12.
 
+The model has one shape, and every table in it is required: self-trained
+per-script quadgram tables with their J2 trigram backoff and the fastText
+cross-check trigram table (tools/build_model.py), plus the reference's word
+(kDeltaOcta/kDistinctOcta, J5/J6) and CJK (CjkUni, kCjkDeltaBi, J3/J4)
+tables, closest-alt targets and hint tables parsed verbatim from the
+checkout (tools/parse_reference_tables.py). Words and CJK text score only
+through the reference tables; an .npz missing any table fails at load.
+
 The whole model serializes to one .npz so Spark executors can lazily load it
 from SparkFiles / a broadcast variable (reference analogue: "dynamic mode"
 flat-file model, public/compact_lang_det.h:382-425).
@@ -29,7 +37,8 @@ SLOTS = 4  # 4-way associative buckets (internal/cld2tablesummary.h:27-31)
 
 @dataclass
 class GramTable:
-    """One 4-way-associative gram-hash table (quadgram or CJK unigram)."""
+    """One 4-way-associative gram-hash table (per-script quadgram, J2
+    backoff trigram, or cross-check trigram)."""
 
     keys: np.ndarray     # (n_buckets, 4) uint32, 0 = empty
     langs: np.ndarray    # (n_buckets, 4, 3) uint8 -- *global* lang ids (255 = none)
@@ -233,27 +242,25 @@ class Cld2sModel:
 
     langs: list[str]                       # global lang id -> ISO code
     group_tables: dict[str, GramTable]     # script name -> quadgram table
-    cjk_uni: GramTable | None              # CJK unigram table (key = codepoint)
     expected_1kb: np.ndarray               # (n_langs,) int32 expected score per 1KB
-    version: str = "cld2s-r1"
     # J2 dual-lookup second tables (kQuad_obj2, GetQuadHits
     # internal/cldutil.cc:355-362): probed on a main-table miss. The
     # reference uses table 2 as overflow space for odd table sizes; ours is
     # a prefix-trigram backoff trained on the same split (documented
     # deviation -- see detect.py).
-    quad_backoff: dict[str, GramTable] | None = None
-    tri: GramTable | None = None           # trigram table (fastText cross-check)
-    words: GramTable | None = None         # legacy self-trained word table
-    cjk_bi: GramTable | None = None        # legacy self-trained CJK bigram table
-    # Reference tables parsed from the checkout (tools/parse_reference_tables.py)
-    ref_word_delta: RefTable | None = None     # kDeltaOcta_obj (J5)
-    ref_word_distinct: RefTable | None = None  # kDistinctOcta_obj (J5/J6)
-    ref_cjk_bi: RefTable | None = None         # kCjkDeltaBi_obj (J4, BiHashV2)
-    ref_cjk_uni: UniTable | None = None        # CjkUni DFA + kCjkCompat (J3)
+    quad_backoff: dict[str, GramTable]
+    tri: GramTable                         # trigram table (fastText cross-check)
+    # Reference tables parsed from the checkout (tools/parse_reference_tables.py);
+    # words and CJK text score ONLY through these
+    ref_word_delta: RefTable               # kDeltaOcta_obj (J5)
+    ref_word_distinct: RefTable            # kDistinctOcta_obj (J5/J6)
+    ref_cjk_bi: RefTable                   # kCjkDeltaBi_obj (J4, BiHashV2)
+    ref_cjk_uni: UniTable                  # CjkUni DFA + kCjkCompat (J3)
     # closest-alt merge targets for RemoveUnreliableLanguages (P7), global
     # lang ids, -1 = none (kClosestAltLanguage, compact_lang_det_impl.cc:252-427)
-    closest_alt: np.ndarray | None = None
-    hints: HintTables | None = None
+    closest_alt: np.ndarray
+    hints: HintTables                      # lang-tag / TLD priors (J8)
+    version: str = "cld2s-r1"
     lang_id: dict[str, int] = field(default_factory=dict)
 
     def __post_init__(self):
@@ -267,55 +274,37 @@ class Cld2sModel:
             "version": np.array([self.version]),
             "group_names": np.array(sorted(self.group_tables)),
         }
+
+        def put_gram(prefix: str, t: GramTable) -> None:
+            arrs[f"{prefix}_keys"] = t.keys
+            arrs[f"{prefix}_langs"] = t.langs
+            arrs[f"{prefix}_qprobs"] = t.qprobs
+
         for name, t in self.group_tables.items():
-            arrs[f"g_{name}_keys"] = t.keys
-            arrs[f"g_{name}_langs"] = t.langs
-            arrs[f"g_{name}_qprobs"] = t.qprobs
-        if self.quad_backoff:
-            arrs["backoff_names"] = np.array(sorted(self.quad_backoff))
-            for name, t in self.quad_backoff.items():
-                arrs[f"b_{name}_keys"] = t.keys
-                arrs[f"b_{name}_langs"] = t.langs
-                arrs[f"b_{name}_qprobs"] = t.qprobs
-        if self.cjk_uni is not None:
-            arrs["cjk_keys"] = self.cjk_uni.keys
-            arrs["cjk_langs"] = self.cjk_uni.langs
-            arrs["cjk_qprobs"] = self.cjk_uni.qprobs
-        if self.tri is not None:
-            arrs["tri_keys"] = self.tri.keys
-            arrs["tri_langs"] = self.tri.langs
-            arrs["tri_qprobs"] = self.tri.qprobs
-        if self.words is not None:
-            arrs["word_keys"] = self.words.keys
-            arrs["word_langs"] = self.words.langs
-            arrs["word_qprobs"] = self.words.qprobs
-        if self.cjk_bi is not None:
-            arrs["cjkbi_keys"] = self.cjk_bi.keys
-            arrs["cjkbi_langs"] = self.cjk_bi.langs
-            arrs["cjkbi_qprobs"] = self.cjk_bi.qprobs
+            put_gram(f"g_{name}", t)
+        arrs["backoff_names"] = np.array(sorted(self.quad_backoff))
+        for name, t in self.quad_backoff.items():
+            put_gram(f"b_{name}", t)
+        put_gram("tri", self.tri)
         for name, t in (("rwd", self.ref_word_delta),
                         ("rwx", self.ref_word_distinct),
                         ("rcb", self.ref_cjk_bi)):
-            if t is not None:
-                arrs[f"{name}_keys"] = t.keys
-                arrs[f"{name}_keymask"] = np.array([t.keymask], dtype=np.uint32)
-                arrs[f"{name}_langs_latn"] = t.langs_latn
-                arrs[f"{name}_langs_othr"] = t.langs_othr
-                arrs[f"{name}_qprobs"] = t.qprobs
-        if self.ref_cjk_uni is not None:
-            arrs["rcu_cps"] = self.ref_cjk_uni.cps
-            arrs["rcu_langs"] = self.ref_cjk_uni.langs
-            arrs["rcu_qprobs"] = self.ref_cjk_uni.qprobs
-        if self.closest_alt is not None:
-            arrs["closest_alt"] = self.closest_alt
-        if self.hints is not None:
-            for nm, d in (("htf", self.hints.tag_full),
-                          ("hts", self.hints.tag_short),
-                          ("htd", self.hints.tld)):
-                keys = sorted(d)
-                flat = [d[k] + [(-1, 0)] * (2 - len(d[k])) for k in keys]
-                arrs[f"{nm}_keys"] = np.array(keys)
-                arrs[f"{nm}_vals"] = np.array(flat, dtype=np.int16)  # (m,2,2)
+            arrs[f"{name}_keys"] = t.keys
+            arrs[f"{name}_keymask"] = np.array([t.keymask], dtype=np.uint32)
+            arrs[f"{name}_langs_latn"] = t.langs_latn
+            arrs[f"{name}_langs_othr"] = t.langs_othr
+            arrs[f"{name}_qprobs"] = t.qprobs
+        arrs["rcu_cps"] = self.ref_cjk_uni.cps
+        arrs["rcu_langs"] = self.ref_cjk_uni.langs
+        arrs["rcu_qprobs"] = self.ref_cjk_uni.qprobs
+        arrs["closest_alt"] = self.closest_alt
+        for nm, d in (("htf", self.hints.tag_full),
+                      ("hts", self.hints.tag_short),
+                      ("htd", self.hints.tld)):
+            keys = sorted(d)
+            flat = [d[k] + [(-1, 0)] * (2 - len(d[k])) for k in keys]
+            arrs[f"{nm}_keys"] = np.array(keys)
+            arrs[f"{nm}_vals"] = np.array(flat, dtype=np.int16)  # (m,2,2)
         np.savez_compressed(path, **arrs)
 
     @staticmethod
@@ -324,66 +313,41 @@ class Cld2sModel:
             z = np.load(io.BytesIO(path_or_bytes), allow_pickle=False)
         else:
             z = np.load(path_or_bytes, allow_pickle=False)
-        groups = {}
-        for name in z["group_names"].tolist():
-            groups[name] = GramTable(
-                keys=z[f"g_{name}_keys"], langs=z[f"g_{name}_langs"],
-                qprobs=z[f"g_{name}_qprobs"])
-        backoff = None
-        if "backoff_names" in z:
-            backoff = {}
-            for name in z["backoff_names"].tolist():
-                backoff[name] = GramTable(
-                    keys=z[f"b_{name}_keys"], langs=z[f"b_{name}_langs"],
-                    qprobs=z[f"b_{name}_qprobs"])
-        cjk = None
-        if "cjk_keys" in z:
-            cjk = GramTable(keys=z["cjk_keys"], langs=z["cjk_langs"],
-                            qprobs=z["cjk_qprobs"])
-        tri = None
-        if "tri_keys" in z:
-            tri = GramTable(keys=z["tri_keys"], langs=z["tri_langs"],
-                            qprobs=z["tri_qprobs"])
-        words = None
-        if "word_keys" in z:
-            words = GramTable(keys=z["word_keys"], langs=z["word_langs"],
-                              qprobs=z["word_qprobs"])
-        cjk_bi = None
-        if "cjkbi_keys" in z:
-            cjk_bi = GramTable(keys=z["cjkbi_keys"], langs=z["cjkbi_langs"],
-                               qprobs=z["cjkbi_qprobs"])
-        refs: dict[str, RefTable | None] = {}
-        for name in ("rwd", "rwx", "rcb"):
-            refs[name] = None
-            if f"{name}_keys" in z:
-                refs[name] = RefTable(
-                    keys=z[f"{name}_keys"],
-                    keymask=int(z[f"{name}_keymask"][0]),
-                    langs_latn=z[f"{name}_langs_latn"],
-                    langs_othr=z[f"{name}_langs_othr"],
-                    qprobs=z[f"{name}_qprobs"])
-        ref_uni = None
-        if "rcu_cps" in z:
-            ref_uni = UniTable(cps=z["rcu_cps"], langs=z["rcu_langs"],
-                               qprobs=z["rcu_qprobs"])
-        hints = None
-        if "htf_keys" in z:
-            def _dict(nm):
-                out = {}
-                for k, vals in zip(z[f"{nm}_keys"].tolist(), z[f"{nm}_vals"]):
-                    out[str(k)] = [(int(g), int(w)) for g, w in vals if g >= 0]
-                return out
-            hints = HintTables(tag_full=_dict("htf"), tag_short=_dict("hts"),
-                               tld=_dict("htd"))
+
+        def gram(prefix):
+            return GramTable(keys=z[f"{prefix}_keys"], langs=z[f"{prefix}_langs"],
+                             qprobs=z[f"{prefix}_qprobs"])
+
+        def ref(name):
+            return RefTable(keys=z[f"{name}_keys"],
+                            keymask=int(z[f"{name}_keymask"][0]),
+                            langs_latn=z[f"{name}_langs_latn"],
+                            langs_othr=z[f"{name}_langs_othr"],
+                            qprobs=z[f"{name}_qprobs"])
+
+        def hint_dict(nm):
+            out = {}
+            for k, vals in zip(z[f"{nm}_keys"].tolist(), z[f"{nm}_vals"]):
+                out[str(k)] = [(int(g), int(w)) for g, w in vals if g >= 0]
+            return out
+
+        # every table is required: a missing key raises numpy's KeyError
+        # naming it, rather than loading a model that silently skips a path
         return Cld2sModel(
             langs=[str(x) for x in z["langs"].tolist()],
-            group_tables=groups, quad_backoff=backoff,
-            cjk_uni=cjk, tri=tri, words=words,
-            cjk_bi=cjk_bi,
-            ref_word_delta=refs["rwd"], ref_word_distinct=refs["rwx"],
-            ref_cjk_bi=refs["rcb"], ref_cjk_uni=ref_uni,
-            closest_alt=z["closest_alt"] if "closest_alt" in z else None,
-            hints=hints,
+            group_tables={name: gram(f"g_{name}")
+                          for name in z["group_names"].tolist()},
+            quad_backoff={name: gram(f"b_{name}")
+                          for name in z["backoff_names"].tolist()},
+            tri=gram("tri"),
+            ref_word_delta=ref("rwd"), ref_word_distinct=ref("rwx"),
+            ref_cjk_bi=ref("rcb"),
+            ref_cjk_uni=UniTable(cps=z["rcu_cps"], langs=z["rcu_langs"],
+                                 qprobs=z["rcu_qprobs"]),
+            closest_alt=z["closest_alt"],
+            hints=HintTables(tag_full=hint_dict("htf"),
+                             tag_short=hint_dict("hts"),
+                             tld=hint_dict("htd")),
             expected_1kb=z["expected_1kb"],
             version=str(z["version"][0]),
         )

@@ -29,8 +29,6 @@ from __future__ import annotations
 
 import numpy as np
 
-PREDICTION_TABLE_SIZE = 4096   # kPredictionTableSize (must be 4096)
-SQUEEZE_TEST_THRESH = 4096     # kCheapSqueezeTestThresh
 SQUEEZE_TEST_LEN = 256         # kCheapSqueezeTestLen
 SPACES_TRIGGER_PCT = 25        # kSpacesTriggerPercent
 PREDICT_TRIGGER_PCT = 67       # kPredictTriggerPercent

@@ -9,7 +9,7 @@ import pytest
 from test_frozen_fixture import SF_DIR
 
 SLICE = ["keep_drop", "drop_reasons", "scrub_pii", "quality_flags",
-         "toxicity", "lang_spans"]
+         "toxicity", "lang_spans", "langid", "lang_histogram"]
 
 
 @pytest.fixture(scope="module")
@@ -34,3 +34,14 @@ def test_query_matches_oracle(spark, contract, name):
     assert name in oracles
     ok, msg = check_query(spark, con, name, SF_DIR, oracles)
     assert ok, f"{name}: {msg}"
+
+
+def test_dropped_view_is_registered_again(spark, contract):
+    """A query entry restores a temp view a caller dropped: the per-session
+    registration memo must not trust the app id alone."""
+    from tools.check_contract import check_query
+
+    con, oracles = contract
+    spark.catalog.dropTempView("transcripts")
+    ok, msg = check_query(spark, con, "quality_flags", SF_DIR, oracles)
+    assert ok, f"quality_flags: {msg}"

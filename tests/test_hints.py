@@ -29,19 +29,19 @@ def _corpus_text(case_id: str) -> str:
 def test_hint_redirects_within_close_set():
     hr = _corpus_text("hr_Latn")
     assert detect_batch([hr])["lang1"][0] == "hr"
-    assert detect_batch([hr], lang_hints=["bs"])["lang1"][0] == "bs"
-    assert detect_batch([hr], lang_hints=["hr"])["lang1"][0] == "hr"
+    assert detect_batch([hr], hints=[{"lang": "bs"}])["lang1"][0] == "bs"
+    assert detect_batch([hr], hints=[{"lang": "hr"}])["lang1"][0] == "hr"
     bs = _corpus_text("bs_Latn")
-    assert detect_batch([bs], lang_hints=["hr"])["lang1"][0] == "hr"
+    assert detect_batch([bs], hints=[{"lang": "hr"}])["lang1"][0] == "hr"
 
 
 def test_hint_never_forces_clear_text():
-    res = detect_batch([CLEAR_EN], lang_hints=["fr"])
+    res = detect_batch([CLEAR_EN], hints=[{"lang": "fr"}])
     assert res["lang1"][0] == "en"
 
 
 def test_unknown_hint_code_is_ignored():
-    a = detect_batch([CLEAR_EN], lang_hints=["zz-bogus"])
+    a = detect_batch([CLEAR_EN], hints=[{"lang": "zz-bogus"}])
     b = detect_batch([CLEAR_EN])
     assert a["lang1"][0] == b["lang1"][0]
     assert a["pct1"][0] == b["pct1"][0]

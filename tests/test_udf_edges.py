@@ -61,7 +61,7 @@ CASES = {
     "best_effort": (L.make_detect_summary_udf(best_effort=True), 0,
                     lambda t: _summary(t, best_effort=True)),
     "ext_lang_hint": (L.detect_summary_ext_udf, 1,
-                      lambda t: _summary(t, lang_hints=[HINTS[0]] * len(t))),
+                      lambda t: _summary(t, hints=[{"lang": HINTS[0]}] * len(t))),
     "ext_all_hints": (L.detect_summary_ext_udf, 4,
                       lambda t: _summary(t, hints=[dict(zip(HINT_KEYS, HINTS))] * len(t))),
     "detect_spans_udf": (L.detect_spans_udf, 0, _spans),
